@@ -65,7 +65,7 @@ def build(log=sys.stderr):
     cp = os.path.join(spark_jars(), "*")
     print(f"perfbench: compiling {len(srcs)} sources", file=log, flush=True)
     r = subprocess.run(
-        ["java", "-Xss8m", "-Xmx2g", "-cp", cp, "scala.tools.nsc.Main", *SCALAC_OPTS,
+        ["java", "-Xss8m", "-Xmx2g", "-XX:-UsePerfData", "-cp", cp, "scala.tools.nsc.Main", *SCALAC_OPTS,
          "-classpath", cp, "-d", tmp, "@" + argfile],
         stdout=log, stderr=log)
     if r.returncode != 0:

@@ -107,7 +107,7 @@ def run_jvm(classes, args, run_dir, deadline):
     tmp = os.path.join(run_dir, "tmp")
     os.makedirs(tmp, exist_ok=True)
     cp = classes + os.pathsep + os.path.join(build.spark_jars(), "*")
-    cmd = ["java", f"-Xmx{HEAP}", f"-Xms{HEAP}", "-Xss8m",
+    cmd = ["java", f"-Xmx{HEAP}", f"-Xms{HEAP}", "-Xss8m", "-XX:-UsePerfData",
            *[x for p in JVM_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")],
            f"-Djava.io.tmpdir={tmp}", f"-Dspark.local.dir={tmp}",
            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
