@@ -3,8 +3,6 @@
 Everything here is a pure function of its arguments: the same seed gives
 byte-identical files and identical job lists and query samples.
 
-- `tables`: the ten parquet tables the registry queries read (the fixture
-  schema of FIXTURES.md section 3), at a given scale factor.
 - `corpus`: Zipf-distributed text input directories for `mr_jobs`, some of
   them carrying one hot token at about 30% of all tokens.
 - `jobs`: the `mr_jobs` job list over a corpus.
@@ -17,159 +15,6 @@ import random
 import re
 
 import numpy as np
-
-# --------------------------------------------------------------------------
-# Registry tables
-# --------------------------------------------------------------------------
-
-# Fixed: the tables are the workload's data set, not part of what the
-# workload seed varies (the seed picks the query sample and its order).
-TABLE_SEED = 42
-
-TABLE_NAMES = ["region", "nation", "customer", "supplier", "part", "orders",
-               "lineitem", "events", "documents", "embeddings"]
-
-DOC_WORDS = ("join hash row batch scan column customer filter small slow merge "
-             "order vector line table data agg value key stream window a spark "
-             "part group big sort query fast the").split()
-
-
-def _ts_us(start, seconds):
-    base = np.datetime64(start, "us")
-    return base + (np.asarray(seconds) * 1_000_000).astype("int64").astype("timedelta64[us]")
-
-
-def _money(rng, lo, hi, n):
-    return np.round(rng.uniform(lo, hi, n), 2)
-
-
-def table_columns(sf):
-    """Row counts per table at scale factor `sf` (the fixture ladder)."""
-    return {
-        "customer": max(1, int(150_000 * sf)),
-        "supplier": max(1, int(10_000 * sf)),
-        "part": max(1, int(200_000 * sf)),
-        "orders": max(1, int(1_500_000 * sf)),
-        "lineitem": max(1, int(6_000_000 * sf)),
-        "events": max(1, int(1_000_000 * sf)),
-        "documents": max(500, int(50_000 * sf)),
-        "embeddings": max(500, int(20_000 * sf)),
-    }
-
-
-def tables(out_dir, sf):
-    """Write the ten tables as `<out_dir>/<name>.parquet` files."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    rng = np.random.RandomState(TABLE_SEED)
-    n = table_columns(sf)
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write(name, cols):
-        pq.write_table(pa.table(cols), os.path.join(out_dir, f"{name}.parquet"))
-
-    write("region", {
-        "r_regionkey": pa.array(range(5), pa.int32()),
-        "r_name": ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"],
-    })
-    write("nation", {
-        "n_nationkey": pa.array(range(25), pa.int32()),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
-    })
-    c = n["customer"]
-    write("customer", {
-        "c_custkey": pa.array(np.arange(c), pa.int64()),
-        "c_name": [f"Customer#{i:09d}" for i in range(c)],
-        "c_nationkey": pa.array(rng.randint(0, 25, c), pa.int32()),
-        "c_acctbal": _money(rng, -999.99, 9999.99, c),
-        "c_mktsegment": rng.choice(["AUTOMOBILE", "BUILDING", "FURNITURE",
-                                    "HOUSEHOLD", "MACHINERY"], c).tolist(),
-    })
-    s = n["supplier"]
-    write("supplier", {
-        "s_suppkey": pa.array(np.arange(s), pa.int64()),
-        "s_name": [f"Supplier#{i:09d}" for i in range(s)],
-        "s_nationkey": pa.array(rng.randint(0, 25, s), pa.int32()),
-        "s_acctbal": _money(rng, -999.99, 9999.99, s),
-    })
-    p = n["part"]
-    adj = ["small", "red", "blue", "hot", "old", "large", "new", "cold"]
-    noun = ["ring", "widget", "bolt", "gear", "gizmo", "plate", "anvil", "nut"]
-    write("part", {
-        "p_partkey": pa.array(np.arange(p), pa.int64()),
-        "p_name": [f"{adj[a]} {noun[b]}" for a, b in
-                   zip(rng.randint(0, 8, p), rng.randint(0, 8, p))],
-        "p_brand": [f"Brand#{b}" for b in rng.randint(1, 26, p)],
-        "p_type": rng.choice(["ECONOMY", "SMALL", "MEDIUM", "PROMO", "STANDARD",
-                              "LARGE"], p).tolist(),
-        "p_size": pa.array(rng.randint(1, 51, p), pa.int32()),
-        "p_retailprice": np.round(900 + (np.arange(p) % 1000) / 10.0, 2),
-    })
-    o = n["orders"]
-    day = 86_400
-    write("orders", {
-        "o_orderkey": pa.array(np.arange(o), pa.int64()),
-        "o_custkey": pa.array(rng.randint(0, c, o), pa.int64()),
-        "o_orderstatus": rng.choice(["F", "O", "P"], o).tolist(),
-        "o_totalprice": _money(rng, 1000, 500_000, o),
-        "o_orderdate": pa.array(_ts_us("1995-01-01", rng.randint(0, 2404, o) * day),
-                                pa.timestamp("us")),
-        "o_orderpriority": rng.choice(["1-URGENT", "2-HIGH", "3-MEDIUM",
-                                       "4-NOT SPECIFIED", "5-LOW"], o).tolist(),
-    })
-    li = n["lineitem"]
-    write("lineitem", {
-        "l_orderkey": pa.array(rng.randint(0, o, li), pa.int64()),
-        "l_partkey": pa.array(rng.randint(0, p, li), pa.int64()),
-        "l_suppkey": pa.array(rng.randint(0, s, li), pa.int64()),
-        "l_linenumber": pa.array(rng.randint(1, 8, li), pa.int32()),
-        "l_quantity": rng.randint(1, 51, li).astype("float64"),
-        "l_extendedprice": _money(rng, 900, 105_000, li),
-        "l_discount": rng.randint(0, 11, li) / 100.0,
-        "l_tax": rng.randint(0, 9, li) / 100.0,
-        "l_returnflag": rng.choice(["A", "N", "R"], li).tolist(),
-        "l_linestatus": rng.choice(["O", "F"], li).tolist(),
-        "l_shipdate": pa.array(_ts_us("1995-01-02", rng.randint(0, 2498, li) * day),
-                               pa.timestamp("us")),
-    })
-    e = n["events"]
-    gaps = rng.exponential(30 * day / e, e)
-    write("events", {
-        "event_id": pa.array(np.arange(e), pa.int64()),
-        "ts": pa.array(_ts_us("2024-01-01", np.cumsum(gaps)), pa.timestamp("us")),
-        "user_id": pa.array(rng.randint(0, max(2, int(15_000 * sf)), e), pa.int64()),
-        "event_type": rng.choice(["view", "click", "purchase", "signup", "error"], e).tolist(),
-        "value": np.maximum(0.01, np.round(rng.exponential(50.0, e), 2)),
-        "props": [f'{{"k": {k}}}' for k in rng.randint(0, 100, e)],
-    })
-    d = n["documents"]
-    texts = []
-    for i in range(d):
-        if i > 20 and rng.rand() < 0.05:  # near-duplicate of an earlier doc
-            texts.append(texts[rng.randint(0, i)] + " dup")
-        else:
-            texts.append(" ".join(rng.choice(DOC_WORDS, rng.randint(10, 101))))
-    write("documents", {
-        "doc_id": pa.array(np.arange(d), pa.int64()),
-        "text": texts,
-        "lang": rng.choice(["en", "zh", "es", "de", "fr"], d,
-                           p=[0.44, 0.14, 0.14, 0.14, 0.14]).tolist(),
-        "source": [f"src{i % 20}" for i in range(d)],
-        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-    })
-    m = n["embeddings"]
-    centers = rng.normal(0, 1, (10, 64))
-    labels = rng.randint(0, 10, m)
-    vecs = centers[labels] + rng.normal(0, 1.0, (m, 64))
-    vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype("float32")
-    write("embeddings", {
-        "vec_id": pa.array(np.arange(m), pa.int64()),
-        "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
-        "label": pa.array(labels, pa.int32()),
-    })
-
 
 # --------------------------------------------------------------------------
 # mr_jobs corpus and job list

@@ -17,6 +17,7 @@ The last line of stdout is one JSON object:
 
 Other modes:
   --smoke         tiny scale and corpus, for the benchmark's own tests
+  --queries a,b   time these registry queries instead of the seeded sample
   --calibrate     time and fold every registry query; rewrites costs.json
                   (input of the cost strata) and expected.json (answer key)
 
@@ -42,11 +43,23 @@ T0 = time.monotonic()
 DEADLINE_S = 170  # the whole run, build excluded, ends within this
 WORK = build.OUT
 
-# registry scale factor (fixture ladder) and set-ups per run
+# registry scale factor: the fixture tables under data/sf<SF>
 SF = {"full": 0.01, "smoke": 0.001}
-SETUPS = 3
+
+# set-ups per run; setup_s is their median, so the first set-up's cold JVM
+# never sets it
+SETUPS = {"mr_jobs": 3, "sql_analytics": 3, "llm_corpus": 2}
 
 SQL_MODULES = ["Relational", "EventQueries", "StatsQueries"]
+# queries of SQL_MODULES that read a session artifact Bench.warmUp builds
+# (the z-ordered lineitem layout); they belong to llm_corpus, so that
+# sql_analytics builds no artifacts
+SQL_ARTIFACT_CONSUMERS = {"q_zorder_probe"}
+
+# each set-up's untimed operation: the same for every seed, so set-up time
+# does not depend on the sample
+SETUP_QUERY = {"sql_analytics": "q_tpch_q3", "llm_corpus": "q_lexical_diversity"}
+SETUP_JOB_DIR = {"full": 7, "smoke": 1}
 
 WORKLOADS = {
     "mr_jobs": "jobs",
@@ -63,7 +76,8 @@ CORPUS = {
     "smoke": {"dir_mb": [0.05, 0.1, 0.05, 0.1], "hot": {1, 2}, "jobs": 6},
 }
 # registry samples: one query per stratum of this many cost neighbours
-WIDTH = {"full": 4, "smoke": 32}
+WIDTH = {("full", "sql_analytics"): 3, ("full", "llm_corpus"): 6,
+         ("smoke", "sql_analytics"): 32, ("smoke", "llm_corpus"): 32}
 
 E2E_UNITS = {"setup_s": "s", "op_p50_s": "s", "op_p80_s": "s", "ops_per_s": "1/s"}
 
@@ -89,17 +103,8 @@ def cores():
 
 
 def table_dir(size):
-    """Generated registry tables, cached per scale and generator source."""
-    import hashlib
-
-    tag = hashlib.sha256(open(os.path.join(HERE, "gen.py"), "rb").read()).hexdigest()[:12]
-    d = os.path.join(WORK, "data", f"sf{SF[size]}-{tag}")
-    if not os.path.isfile(os.path.join(d, ".done")):
-        shutil.rmtree(d, ignore_errors=True)
-        gen.tables(d + ".tmp", SF[size])
-        open(os.path.join(d + ".tmp", ".done"), "w").close()
-        os.rename(d + ".tmp", d)
-    return d
+    """The registry tables: copies of the seed-42 fixture tables at one scale."""
+    return os.path.join(HERE, "data", f"sf{SF[size]}")
 
 
 def run_jvm(classes, args, run_dir, deadline):
@@ -141,6 +146,14 @@ def jobs_plan(seed, size, run_dir):
     shutil.copytree(os.path.join(HERE, "exec"), exe)
     for f in os.listdir(exe):
         os.chmod(os.path.join(exe, f), 0o755)
+    def line(label, j, out):
+        d, nbytes, _ = dirs[j["dir"]]
+        mapper, reducer = f"{j['kind']}_map", f"{j['kind']}_reduce"
+        if j["piped"]:
+            mapper, reducer = os.path.join(exe, mapper), os.path.join(exe, reducer)
+        return ["job", label, d, out, mapper, reducer, str(j["num_mappers"]), str(j["num_reducers"]),
+                str(nbytes)]
+
     expected, lines, key = {}, [], []
     for i, j in enumerate(gen.jobs(seed, dirs, c["jobs"])):
         d, nbytes, hot = dirs[j["dir"]]
@@ -148,33 +161,35 @@ def jobs_plan(seed, size, run_dir):
             out = gen.expected_lines(d, j["kind"])
             expected[(d, j["kind"])] = (len(out), gen.digest(out))
         key.append(expected[(d, j["kind"])])
-        mapper, reducer = f"{j['kind']}_map", f"{j['kind']}_reduce"
-        if j["piped"]:
-            mapper, reducer = os.path.join(exe, mapper), os.path.join(exe, reducer)
         label = f"{'piped' if j['piped'] else 'native'}-{j['kind']}-d{j['dir']}{'-hot' if hot else ''}"
-        lines.append(["job", label, d, os.path.join(run_dir, "out", f"job{i:04d}"), mapper, reducer,
-                      str(j["num_mappers"]), str(j["num_reducers"]), str(nbytes)])
+        lines.append(line(label, j, os.path.join(run_dir, "out", f"job{i:04d}")))
+    # the set-ups' untimed job: a native word count over one fixed-size dir
+    sd = SETUP_JOB_DIR[size]
+    setup_op = line(f"setup-wc-d{sd}", {"dir": sd, "kind": "wc", "piped": False, "num_mappers": 2,
+                                        "num_reducers": 2}, os.path.join(run_dir, "out", "setup"))
     setup_dirs = []
-    for i in range(SETUPS):  # holds no tables: warm-up then only warms the engine
+    for i in range(SETUPS["mr_jobs"]):  # holds no tables: warm-up then only warms the engine
         sd = os.path.join(run_dir, f"setup{i}")
         os.makedirs(sd)
         setup_dirs.append(sd)
-    return setup_dirs, lines, key
+    return setup_dirs, [], setup_op, lines, key
 
 
-def registry_plan(workload, seed, size, run_dir):
-    """Query sample, one table copy per set-up, and the answer key."""
+def registry_plan(workload, seed, size, run_dir, only=None):
+    """Query sample (or the queries `only` names), one table copy per
+    set-up, and the answer key. Bench.warmUp is restricted to every query
+    of the workload, not just the sample, so each seed's set-up builds the
+    same artifacts."""
     costs = gen.load_json(os.path.join(HERE, "costs.json"))[workload]
-    sample = gen.query_sample(seed, costs, WIDTH[size])
+    sample = only or gen.query_sample(seed, costs, WIDTH[size, workload])
     src = table_dir(size)
     setup_dirs = []
-    for i in range(SETUPS):  # one copy per set-up: the engine memoizes artifacts per directory
+    for i in range(SETUPS[workload]):  # one copy per set-up: the engine memoizes artifacts per directory
         sd = os.path.join(run_dir, f"setup{i}")
-        shutil.copytree(src, sd, ignore=shutil.ignore_patterns(".done"))
+        shutil.copytree(src, sd)
         setup_dirs.append(sd)
     key = gen.load_json(os.path.join(HERE, "expected.json"))[f"sf{SF[size]}"]
-    # two passes: every sampled query is timed twice, in the same order
-    return setup_dirs, [["query", q] for q in sample] * 2, key
+    return setup_dirs, sorted(costs), ["query", SETUP_QUERY[workload]], [["query", q] for q in sample], key
 
 
 def check_op(o, key, kind):
@@ -218,7 +233,8 @@ def calibrate(classes):
             for r in ok}
         if size == "full":
             for r in ok:
-                w = "sql_analytics" if r["module"] in SQL_MODULES else "llm_corpus"
+                sql = r["module"] in SQL_MODULES and r["name"] not in SQL_ARTIFACT_CONSUMERS
+                w = "sql_analytics" if sql else "llm_corpus"
                 costs.setdefault(w, {})[r["name"]] = round(r["latency_s"], 4)
     for name, obj in (("costs.json", costs), ("expected.json", expected)):
         with open(os.path.join(HERE, name), "w") as fh:
@@ -235,14 +251,18 @@ def bench(args, classes):
     os.makedirs(run_dir)
     try:
         if kind == "jobs":
-            setup_dirs, op_lines, key = jobs_plan(args.seed, size, run_dir)
+            setup_dirs, warm, setup_op, op_lines, key = jobs_plan(args.seed, size, run_dir)
         else:
-            setup_dirs, op_lines, key = registry_plan(args.workload, args.seed, size, run_dir)
+            only = args.queries.split(",") if args.queries else None
+            setup_dirs, warm, setup_op, op_lines, key = registry_plan(
+                args.workload, args.seed, size, run_dir, only)
         plan = os.path.join(run_dir, "plan.tsv")
         with open(plan, "w") as fh:
             fh.write(f"workload\t{args.workload}\nseconds\t{args.seconds}\ntrace\t{args.trace}\n")
+            fh.write(f"warm\t{','.join(warm)}\n")
             for d in setup_dirs:
                 fh.write(f"setup_dir\t{d}\n")
+            fh.write("\t".join(["setup_op"] + setup_op) + "\n")
             for ln in op_lines:
                 fh.write("\t".join(ln) + "\n")
         out_path = os.path.join(run_dir, "out.json")
@@ -272,6 +292,7 @@ def main(argv=None):
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--smoke", action="store_true")
     ap.add_argument("--calibrate", action="store_true")
+    ap.add_argument("--queries", help="comma-separated registry queries to time instead of the sample")
     args = ap.parse_args(argv)
 
     classes = build.build()

@@ -21,41 +21,61 @@ import graft.api.{Engine, JobResult, JobSpec}
   * Usage: perfbench.Main <plan.tsv> <out.json>
   *
   * Plan lines (tab-separated): `workload <name>`, `seconds <s>`,
-  * `trace <0|1>`, `setup_dir <dir>` (one per set-up; the last one's session
-  * and directory serve the timed phases), and one line per operation:
+  * `trace <0|1>`, `warm <query,query,...>` (the queries `Bench.warmUp` is
+  * restricted to), `setup_dir <dir>` (one per set-up; the last one's session
+  * and directory serve the timed phases), `setup_op <operation>` (each
+  * set-up's untimed operation), and one line per operation:
   * `query <name>` or
   * `job <label> <input> <output> <mapper> <reducer> <numMappers> <numReducers> <inputBytes>`.
   *
   * Load shape: one client thread, one operation in flight (closed loop);
-  * `System.gc()` between operations, outside the timed span. A query
-  * operation times a run after the query's first in the session; the first
-  * goes just before, untimed. A timed phase runs the operations in order and
-  * stops when they run out or `seconds` have passed.
+  * `System.gc()` between operations, outside the timed span. A query's
+  * first run in a session is untimed: a phase first primes every query of
+  * its list that the session has not run yet, then runs the operations in
+  * order and stops when they run out or `seconds` have passed since the
+  * first of them began.
   */
 object Main {
   sealed trait Op { def label: String }
   final case class QueryOp(label: String) extends Op
   final case class JobOp(label: String, spec: JobSpec, inputBytes: Long) extends Op
 
-  final case class Plan(workload: String, seconds: Double, trace: Boolean, setupDirs: Seq[String], ops: Seq[Op])
+  final case class Plan(
+      workload: String,
+      seconds: Double,
+      trace: Boolean,
+      warm: Set[String],
+      setupDirs: Seq[String],
+      setupOp: Op,
+      ops: Seq[Op])
+
+  private def op(f: Array[String]): Op = f(0) match {
+    case "query" => QueryOp(f(1))
+    case "job"   => JobOp(f(1), JobSpec(f(2), f(3), f(4), f(5), f(6).toInt, f(7).toInt), f(8).toLong)
+  }
 
   def parse(path: String): Plan = {
-    val kv   = mutable.Map.empty[String, String]
-    val dirs = mutable.ArrayBuffer.empty[String]
-    val ops  = mutable.ArrayBuffer.empty[Op]
+    val kv      = mutable.Map.empty[String, String]
+    val dirs    = mutable.ArrayBuffer.empty[String]
+    val ops     = mutable.ArrayBuffer.empty[Op]
+    var setupOp = Option.empty[Op]
     for (line <- Files.readAllLines(Paths.get(path), UTF_8).asScala if line.nonEmpty) {
       val f = line.split("\t", -1)
       f(0) match {
-        case "setup_dir" => dirs += f(1)
-        case "query"     => ops += QueryOp(f(1))
-        case "job" =>
-          ops += JobOp(f(1), JobSpec(f(2), f(3), f(4), f(5), f(6).toInt, f(7).toInt), f(8).toLong)
-        case k => kv(k) = f(1)
+        case "setup_dir"     => dirs += f(1)
+        case "setup_op"      => setupOp = Some(op(f.drop(1)))
+        case "query" | "job" => ops += op(f)
+        case k               => kv(k) = f(1)
       }
     }
-    require(dirs.nonEmpty && ops.nonEmpty, s"plan $path needs setup_dir and operation lines")
-    Plan(kv("workload"), kv("seconds").toDouble, kv("trace") == "1", dirs.toSeq, ops.toSeq)
+    require(dirs.nonEmpty && setupOp.nonEmpty && ops.nonEmpty,
+      s"plan $path needs setup_dir, setup_op and operation lines")
+    Plan(kv("workload"), kv("seconds").toDouble, kv("trace") == "1",
+      kv("warm").split(",").filter(_.nonEmpty).toSet, dirs.toSeq, setupOp.get, ops.toSeq)
   }
+
+  /** Seconds of in-construction builds (wave memos) recorded so far. */
+  private def buildWalls: Double = graft.core.BuildWalls.snapshot.values.sum
 
   private def gcMillis: Long =
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(b => math.max(0L, b.getCollectionTime)).sum
@@ -148,11 +168,11 @@ object Main {
     val spans   = new Spans
     val tracer  = new Tracer
     val isJobs  = plan.ops.head.isInstanceOf[JobOp]
-    val queries = plan.ops.collect { case QueryOp(n) => n }.toSet
     var spark: SparkSession = null
     var engine: Engine      = null
     var dir                 = ""
     val seen                = mutable.Set.empty[String] // queries run in this session
+    val primeErrors         = mutable.Map.empty[String, String]
 
     def attach(): Unit = {
       spark.sparkContext.addSparkListener(tracer)
@@ -164,21 +184,21 @@ object Main {
       spark.listenerManager.unregister(tracer)
     }
 
+    /** A query's first run in the session, untimed as an operation: it pays
+      * one-time costs (codegen compilation, first materialization of shared
+      * caches and wave memos) whose size depends on which queries ran
+      * before it. Returns its seconds.
+      */
+    def prime(name: String): Double = {
+      seen += name
+      val t0 = System.nanoTime()
+      try fold(graft.SparkEntry.queries(name)(spark, dir)): Unit
+      catch { case NonFatal(e) => primeErrors(name) = Option(e.getMessage).getOrElse(e.toString).take(300) }
+      (System.nanoTime() - t0) / 1e9
+    }
+
     /** One operation; returns its record. `root` is the parent span. */
     def runOp(op: Op, idx: Int, traced: Boolean, root: Int): Map[String, Any] = {
-      // a query's first sight in a session pays one-time costs (codegen
-      // compilation, first materialization of shared caches) whose size
-      // depends on which queries ran before it; it runs untimed, and the
-      // operation times the query's next run
-      val first = op match {
-        case QueryOp(name) if seen.add(name) =>
-          val f0 = System.nanoTime()
-          val r =
-            try { fold(graft.SparkEntry.queries(name)(spark, dir)); "" }
-            catch { case NonFatal(e) => Option(e.getMessage).getOrElse(e.toString).take(300) }
-          Some(((System.nanoTime() - f0) / 1e9, r))
-        case _ => None
-      }
       System.gc()
       val gc0 = gcMillis
       op match {
@@ -207,8 +227,8 @@ object Main {
             "execute_s" -> (t2 - t1) / 1e9, "gc_s" -> gcMs / 1e3,
             "input_bytes" -> (if (df == null) 0L else inputBytes(df, dir)),
             "rows" -> res.map(_._1).getOrElse(-1L), "hash" -> res.map(_._2).getOrElse(""),
-            "first_run_s" -> first.map(_._1).getOrElse(0.0),
-            "error" -> Seq(first.map(_._2).getOrElse(""), res.left.getOrElse("")).filter(_.nonEmpty).mkString("; "))
+            "error" -> Seq(primeErrors.getOrElse(name, ""), res.left.getOrElse("")).filter(_.nonEmpty)
+              .mkString("; "))
 
         case JobOp(label, spec, bytes) =>
           val t0  = System.nanoTime()
@@ -255,11 +275,12 @@ object Main {
       val t1 = System.nanoTime()
       if (plan.trace) attach()
       if (isJobs) engine = new Engine(spark)
-      val artifacts = graft.Bench.warmUp(spark, setupDir, Some(queries))
+      val walls0    = buildWalls
+      val artifacts = graft.Bench.warmUp(spark, setupDir, Some(plan.warm))
       val t2        = System.nanoTime()
-      val first = plan.ops.head match {
+      val first = plan.setupOp match {
         case j: JobOp => j.copy(spec = j.spec.copy(outputDirectory = j.spec.outputDirectory + s"-setup$i"))
-        case q        => q
+        case q: QueryOp => seen += q.label; q // this run is the query's first
       }
       val root = if (plan.trace) spans.add(0, "setup", Clock.us(t0), Clock.now, Map("setup" -> i)) else 0
       val rec  = runOp(first, -1 - i, plan.trace, root)
@@ -269,27 +290,31 @@ object Main {
         spans.add(root, "ext.warmup", Clock.us(t1), Clock.us(t2), artifacts)
       }
       Map("setup" -> i, "session_s" -> (t1 - t0) / 1e9, "warmup_s" -> (t2 - t1) / 1e9,
-        "artifacts" -> artifacts, "first_op_s" -> (t3 - t2) / 1e9, "total_s" -> (t3 - t0) / 1e9,
+        "artifacts" -> artifacts, "build_walls_s" -> (buildWalls - walls0),
+        "first_op_s" -> (t3 - t2) / 1e9, "total_s" -> (t3 - t0) / 1e9,
         "start" -> Clock.us(t0), "end" -> Clock.us(t3), "first_op" -> rec)
     }
 
     def phase(label: String, traced: Boolean): Map[String, Any] = {
       if (plan.trace) { if (traced) attach() else detach() }
-      val walls0 = graft.core.BuildWalls.snapshot.values.sum
+      val walls0 = buildWalls
       val root   = if (traced) spans.add(0, "phase", Clock.now, Clock.now, Map("phase" -> label)) else 0
       val recs   = mutable.ArrayBuffer.empty[Map[String, Any]]
       val start  = System.nanoTime()
       val limit  = (plan.seconds * 1e9).toLong
+      val firsts = plan.ops.collect { case QueryOp(n) if !seen(n) => n }.distinct.map(n => n -> prime(n))
+      val timed  = System.nanoTime()
       var i      = 0
-      while (i < plan.ops.size && System.nanoTime() - start < limit) {
+      while (i < plan.ops.size && System.nanoTime() - timed < limit) {
         recs += runOp(plan.ops(i), i, traced, root)
         i += 1
       }
       val end = System.nanoTime()
       val cacheBytes = spark.sparkContext.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum
       Map("label" -> label, "traced" -> traced, "start" -> Clock.us(start), "end" -> Clock.us(end),
-        "wall_s" -> (end - start) / 1e9, "cache_mb" -> cacheBytes / 1048576.0,
-        "build_walls_s" -> (graft.core.BuildWalls.snapshot.values.sum - walls0), "ops" -> recs.toSeq)
+        "prime_s" -> (timed - start) / 1e9, "wall_s" -> (end - timed) / 1e9,
+        "first_runs" -> firsts.map { case (n, sec) => Json.obj("name" -> n, "seconds" -> sec) },
+        "cache_mb" -> cacheBytes / 1048576.0, "build_walls_s" -> (buildWalls - walls0), "ops" -> recs.toSeq)
     }
 
     val phases =

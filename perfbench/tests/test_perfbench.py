@@ -77,13 +77,28 @@ class SeedDeterminism(unittest.TestCase):
             self.assertEqual(sorted(next(k for k, s in enumerate(strata) if q in s) for q in a),
                              list(range(len(strata))))
 
-    def test_tables(self):
-        with tempfile.TemporaryDirectory() as t1, tempfile.TemporaryDirectory() as t2:
-            gen.tables(t1, 0.0002)
-            gen.tables(t2, 0.0002)
-            a = tree_bytes(t1)
-            self.assertEqual(a, tree_bytes(t2))
-            self.assertEqual(sorted(a), sorted(f"{n}.parquet" for n in gen.TABLE_NAMES))
+
+
+TABLES = ["region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events",
+          "documents", "embeddings"]
+
+
+class Inputs(unittest.TestCase):
+    def test_fixture_tables_at_both_scales(self):
+        for size in run.SF:
+            d = run.table_dir(size)
+            self.assertEqual(sorted(os.listdir(d)), sorted(f"{t}.parquet" for t in TABLES))
+
+    def test_answer_key_and_costs_cover_the_workloads(self):
+        costs = gen.load_json(os.path.join(BENCH, "costs.json"))
+        expected = gen.load_json(os.path.join(BENCH, "expected.json"))
+        self.assertEqual(sorted(costs), ["llm_corpus", "sql_analytics"])
+        self.assertFalse(set(costs["sql_analytics"]) & set(costs["llm_corpus"]))
+        self.assertFalse(set(costs["sql_analytics"]) & run.SQL_ARTIFACT_CONSUMERS)
+        for w, c in costs.items():
+            self.assertIn(run.SETUP_QUERY[w], c)
+            for sf in run.SF.values():
+                self.assertLessEqual(set(c), set(expected[f"sf{sf}"]))
 
 
 class AnswerKey(unittest.TestCase):
@@ -159,11 +174,11 @@ class Arithmetic(unittest.TestCase):
 
 @unittest.skipIf(os.environ.get("PERFBENCH_SKIP_SMOKE"), "PERFBENCH_SKIP_SMOKE set")
 class Smoke(unittest.TestCase):
-    def run_workload(self, workload, trace):
+    def run_workload(self, workload, trace, *extra, env=None):
         r = subprocess.run(
             [sys.executable, os.path.join(BENCH, "run.py"), "--workload", workload, "--seed", "3",
-             "--seconds", "2", "--trace", str(trace), "--smoke"],
-            capture_output=True, text=True, timeout=600)
+             "--seconds", "2", "--trace", str(trace), "--smoke", *extra],
+            capture_output=True, text=True, timeout=600, env=env)
         self.assertEqual(r.returncode, 0, r.stderr[-3000:])
         return json.loads(r.stdout.strip().splitlines()[-1])
 
@@ -180,6 +195,16 @@ class Smoke(unittest.TestCase):
                     self.assertEqual(sorted(res["metrics"]), sorted(m["name"] for m in spec[key]))
                     for m in spec[key]:
                         self.assertEqual(res["metrics"][m["name"]]["unit"], m["unit"])
+
+    def test_build_walls_of_first_runs(self):
+        # under a shuffle budget q_set_join enumerates in bounded waves,
+        # memoized on its first construction in a session, which records
+        # the enumeration wall in BuildWalls; the first run is untimed, so
+        # the metric must come from the set-up and prime pass
+        env = dict(os.environ, SPARK_GRAFT_SHUFFLE_BUDGET="200k")
+        res = self.run_workload("llm_corpus", 1, "--queries", "q_set_join", env=env)
+        self.assertTrue(res["correct"])
+        self.assertGreater(res["metrics"]["ext.build_walls_s"]["value"], 0)
 
 
 if __name__ == "__main__":
