@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Parallelism, Tables}
 import graft.queries.Q
 
 /** EXACT set-similarity self-join with prefix filtering — the
@@ -98,7 +98,6 @@ object SetJoin {
       tDen: Long,
       saltB: Int,
       d1Wave: Option[(Int, Seq[Int])] = None): DataFrame = {
-    val par = sets.sparkSession.sparkContext.defaultParallelism
     // |d| − ⌈t·|d|⌉ + 1 in exact integers: ⌈t·sz⌉ = (sz·tNum + tDen − 1) div tDen
     val plen =
       (col("sz") - call_function("div", col("sz").cast("long") * tNum + lit(tDen - 1), lit(tDen)) +
@@ -119,10 +118,10 @@ object SetJoin {
     }
     val prefA = prefA0
       .withColumn("salt", pmod(hash(col("doc_id")), lit(saltB)))
-      .repartition(par, col("gid"), col("tok"), col("salt"))
+      .transform(Parallelism.spread(_, col("gid"), col("tok"), col("salt")))
     val prefB = pref
       .withColumn("salt", explode(array((0 until saltB).map(lit): _*)))
-      .repartition(par, col("gid"), col("tok"), col("salt"))
+      .transform(Parallelism.spread(_, col("gid"), col("tok"), col("salt")))
     prefA
       .alias("a")
       .join(
@@ -347,12 +346,8 @@ object SetJoin {
     // true bottleneck both half-sweep grinds pointed at. One narrow
     // 500k-row exchange of the set rows buys 32-way map parallelism for
     // everything downstream; at production scale the scan has thousands
-    // of splits and the exchange is a no-op-sized rebalance.
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val sets = Dedup
-      .shingleSets(docs)
-      .filter(size(col("sset")) > 0)
-      .repartition(par)
+    // of splits and the unkeyed spread leaves the frame as it is.
+    val sets = Parallelism.spread(Dedup.shingleSets(docs).filter(size(col("sset")) > 0))
     val tk = sets.select(col("doc_id"), explode(col("sset")).as("tok"))
     val dfs = tk.groupBy("tok").agg(count(lit(1)).as("df"))
     graft.core.Cached.frame(
@@ -540,7 +535,6 @@ object SetJoin {
       saltB: Int,
       salts: Seq[Int],
       payload: Option[DataFrame] = None): DataFrame = {
-    val par  = os.sparkSession.sparkContext.defaultParallelism
     val pay  = payload.getOrElse(os)
     val pref = prefixFrame(os)
     // SALTED enumeration (Vernica 2010's block split, the round-11 fix for
@@ -557,15 +551,15 @@ object SetJoin {
     // once — at salt = hash(d1) — and the candidate set is unchanged.
     // Cost: SaltB× replication of the narrow prefix frame (a few GB at
     // 500k docs); benefit: the quadratic stage engages every core. The
-    // explicit numbered repartitions keep AQE's byte-based coalescing
-    // (same root cause, small input bytes) from re-serializing the sort.
+    // keyed spreads keep AQE's byte-based coalescing (same root cause,
+    // small input bytes) from re-serializing the sort.
     val prefA0 = pref.withColumn("salt", pmod(hash(col("doc_id")), lit(saltB)))
     val prefA = (if (salts.size == saltB) prefA0
                  else prefA0.filter(col("salt").isin(salts.map(Integer.valueOf): _*)))
-      .repartition(par, col("tok"), col("salt"))
+      .transform(Parallelism.spread(_, col("tok"), col("salt")))
     val prefB = pref
       .withColumn("salt", explode(array(salts.map(lit): _*)))
-      .repartition(par, col("tok"), col("salt"))
+      .transform(Parallelism.spread(_, col("tok"), col("salt")))
     // Two output-neutral PPJoin prunes ride the candidate join itself (the
     // exact verify below only discards, so both are pure work savers — and
     // necessary ones: on the 10× stress corpus the small synthetic
@@ -603,14 +597,10 @@ object SetJoin {
     val s1 = pay.select(col("doc_id").as("d1"), col("stoks").as("s1"))
     val s2 = pay.select(col("doc_id").as("d2"), col("stoks").as("s2"))
     val hashTier = cands
-      // explicit numPartitions spread before the CPU-heavy verify: the
-      // candidate frame is BYTE-small, so AQE's size-based coalescing packs
-      // it into a handful of partitions and the per-row array-intersect
-      // then runs nearly serial (measured: 4 tasks busy, 28 cores idle on
-      // the 10× corpus). A user-NUMBERED repartition is exempt from AQE
-      // coalescing, and keying it by d1 lets the first verify join reuse
-      // the exchange.
-      .repartition(par, col("d1"))
+      // spread before the CPU-heavy verify (measured without it: 4 tasks
+      // busy, 28 cores idle on the 10× corpus); keying it by d1 lets the
+      // first verify join reuse the exchange
+      .transform(Parallelism.spread(_, col("d1")))
       // HASH-FIRST topology (round 13): the mult=30/100 single-node gates
       // died of ENOSPC in the exchange that routes candidate rows to their
       // d2 side — each row was carrying the d1 side's FULL payload (string

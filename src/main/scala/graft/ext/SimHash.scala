@@ -58,9 +58,8 @@ object SimHash {
   def signatures(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
     // spread the narrow scan so the per-doc simhash pass runs at full
-    // parallelism (single-task on the one-row-group fixture scan
-    // otherwise — guide §2.5; identity on a multi-split layout)
-    graft.core.Spread.compute(docs.select(col("doc_id"), col("text")))
+    // parallelism (single-task on the one-row-group fixture scan otherwise)
+    graft.core.Parallelism.spread(docs.select(col("doc_id"), col("text")))
       .as[(Long, String)]
       .map { case (id, text) => (id, simhash64(tokenize(text))) }
       .toDF("doc_id", "simhash")

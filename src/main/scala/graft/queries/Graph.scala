@@ -79,7 +79,7 @@ object GraphQueries {
         ).as("e")
       )
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    // Size-derived edge-grain partitioning (guide §2.2; Grain scaladoc):
+    // Size-derived edge-grain partitioning (Parallelism.grain):
     // every superstep's SMJ aligns the rank frame to adj's partition
     // count, so the session default (32) multiplied into 5 iterations of
     // 32-task stages over a sub-MB grain — StageProbe r17 attributed most
@@ -90,7 +90,7 @@ object GraphQueries {
     // yields thousands of partitions.
     val adj = graft.core.Cached.frame(
       edges
-        .repartition(graft.core.Grain.sized(edges), col("src"))
+        .transform(graft.core.Parallelism.grain(_, col("src")))
         .withColumn(
           "outdeg",
           count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("src"))
@@ -689,8 +689,12 @@ object GraphQueries {
     */
   private[graft] def hitsSeed(
       e: org.apache.spark.sql.DataFrame,
-      nSup: Long): org.apache.spark.sql.DataFrame =
-    e.select("s").distinct().select(col("s"), lit(HitsScale / nSup).as("v"))
+      nSup: Long): org.apache.spark.sql.DataFrame = {
+    // nSup == 0 means no edge has a non-NULL supplier: no seed row can join
+    // an edge, so the value is never used — but the build must not throw
+    val v = if (nSup == 0L) 0L else HitsScale / nSup
+    e.select("s").distinct().select(col("s"), lit(v).as("v"))
+  }
 
   /** One HITS half-step push (pre-checkpoint, pre-normalize): attach the
     * |V|-sized score frame to the cached edge grain and partial+final sum

@@ -464,11 +464,7 @@ object Pipeline {
 
   private[graft] def contaminationReport(
       docs: org.apache.spark.sql.DataFrame,
-      spreadAt: Long = 4096L,
-      materialize: Boolean = true): org.apache.spark.sql.DataFrame = {
-    // `materialize = false` preserves the pre-round-15 sort-over-pipeline
-    // plan SOLELY for the heap-retainer forensics probe
-    // (tools.ContamProbe) — every production path materializes
+      spreadAt: Long = 4096L): org.apache.spark.sql.DataFrame = {
     // member grain (doc_id, rep) + split label — one documents scan via
     // the cached exact-group table the dedup family shares
     val mem = Dedup
@@ -572,9 +568,10 @@ object Pipeline {
       // on this salted branch (> spreadAt max copies — never a fixture /
       // bench / correctness plan); the expansion estimate prices the
       // parquet before a byte is written (same ~2x-compression refusal
-      // shape as the gate's), and the memo lets bench reps re-read it.
+      // shape as the gate's), and the memo lets bench reps re-read it. The
+      // heap forensics of the pre-round-15 sort-over-pipeline plan are
+      // recorded in COVERAGE.md ("Materialize-before-sort").
       val expanded = crossA.union(crossB).union(within)
-      if (!materialize) return expanded.orderBy("test_id", "leak_id")
       val key = (docs.queryExecution.analyzed.semanticHash(), spreadAt)
       val dir = contamMemo.computeIfAbsent(
         key,

@@ -1637,13 +1637,9 @@ object Relational {
     // widen ONLY when the scan under-parallelizes (the sf-fixture parquet
     // is 3 splits, which serialized every cached pass onto 3 of 32 cores —
     // the whole residual wall of the pre-r11 form). At 100 TB the scan has
-    // thousands of splits, the condition is false, and no exchange is
-    // added; locally the one 2-column round-robin exchange is repaid 3×
-    // by the consumers below.
-    val par = s.sparkContext.defaultParallelism
-    val base = graft.core.Cached.frame(
-      if (raw.rdd.getNumPartitions < par) raw.repartition(par) else raw
-    )
+    // thousands of splits and the spread adds no exchange; locally the one
+    // 2-column round-robin exchange is repaid 3× by the consumers below.
+    val base = graft.core.Cached.frame(graft.core.Parallelism.spread(raw))
     // ONE sketch serves everything: the 19 ventile bounds spread/prune
     // the sort AND contain the approximate companions as elements 10
     // (0.50 = 10/20) and 19 (0.95 = 19/20) — the previous form paid for

@@ -485,8 +485,9 @@ object StatsQueries {
       // fixture scan plans ONE task, so without the spread the ~32·|orders|
       // hash evaluations serialize on one core (StageProbe r16: two ~6 s
       // single-task stages — this subtree runs twice, once under the ci
-      // broadcast). Spread is a no-op when the scan already parallelizes.
-      val rmeans = graft.core.Spread.compute(base)
+      // broadcast). The spread is the fixed-count RoundRobinPartitioning
+      // directly under the fan-out (pinned by the q_bootstrap_ci golden).
+      val rmeans = graft.core.Parallelism.spread(base)
         .select(col("o_orderkey"), col("p"), explode(sequence(lit(0), lit(31))).as("b"))
         .filter(keep)
         .groupBy(col("b").cast("long").as("b"))

@@ -265,8 +265,9 @@ object TextQueries {
     * `aggregate` over the SORTED array (exact: equal tokens are adjacent
     * after `array_sort`), bigrams via the same shifted-slice `zip_with`
     * (an `element_at(toks, i)` lambda would re-split the text per element —
-    * the O(tokens²) HOF trap). Zero exchanges before the verification
-    * sort, at any corpus scale. Docs with <2 tokens keep their null
+    * the O(tokens²) HOF trap). The token grain is never shuffled: the one
+    * exchange before the verification sort is the scan's round-robin
+    * spread. Docs with <2 tokens keep their null
     * bigram stats via the guarded `when`.
     */
   val repetition: Q = Q(
@@ -275,10 +276,10 @@ object TextQueries {
       // Spread before the per-row folds (the r16 single-row-group lesson):
       // the fixture scan plans ONE task, and with every statistic now
       // computed in-row the whole query would serialize on one core
-      // (StageProbe r17: 0.58 s + 0.84 s single-task stages). Identity on
-      // any healthy multi-split layout.
-      val docs = graft.core.Spread.compute(
-        Tables(s, dir).documents.select(col("doc_id"), col("text")))
+      // (StageProbe r17: 0.58 s + 0.84 s single-task stages). A NULL text
+      // is dropped, as the oracle's unnest(string_split(NULL)) drops it.
+      val docs = graft.core.Parallelism.spread(
+        Tables(s, dir).documents.select(col("doc_id"), col("text")).filter(col("text").isNotNull))
       val toks = split(lower(col("text")), " ", -1)
       // max multiplicity = longest equal-run in the sorted array: fold
       // (prev, run, top) over elements; exact integer, matches max(count)

@@ -87,6 +87,21 @@ class CollocationSpec extends SparkSpec {
     }
   }
 
+  test("q_repetition drops a NULL-text document, as the oracle's unnest does") {
+    // the fixture documents plus one NULL-text row under a fresh doc_id
+    val dir  = java.nio.file.Files.createTempDirectory("repetition-null").toString
+    val docs = graft.core.Tables(spark, sf).documents.select("doc_id", "text")
+    val nullId = docs.agg(max("doc_id")).first().getLong(0) + 1L
+    docs
+      .unionByName(spark.range(nullId, nullId + 1L)
+        .select(col("id").as("doc_id"), lit(null).cast("string").as("text")))
+      .write.parquet(s"$dir/documents.parquet")
+    val q   = graft.queries.Registry.queries("q_repetition")
+    val got = q(spark, dir).collect().toSeq
+    assert(!got.exists(_.getLong(0) == nullId), "the NULL-text document must be dropped")
+    assert(got == q(spark, sf).collect().toSeq, "every non-NULL document keeps its statistics")
+  }
+
   test("q_bpe_pairs: pair mass matches an exact replay and the argmax is the true first merge") {
     val rows = graft.queries.Registry.queries("q_bpe_pairs")(spark, sf).collect()
     assert(rows.length == 50)

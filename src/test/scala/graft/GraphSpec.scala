@@ -297,6 +297,14 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("hitsSeed builds on an empty edge set and returns no rows") {
+    val (e0, _, _) = GraphQueries.hitsEdges(spark, sf)
+    val e          = e0.filter(lit(false))
+    val nSup       = e.agg(countDistinct("s")).first().getLong(0)
+    assert(nSup == 0L)
+    assert(GraphQueries.hitsSeed(e, nSup).count() == 0L)
+  }
+
   test("q_assortativity equals an exact driver-side Newman estimator") {
     val row = graft.queries.Registry.queries("q_assortativity")(spark, sf).collect()(0)
     val edges = graft.ext.Similarity

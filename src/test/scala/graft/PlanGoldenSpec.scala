@@ -55,7 +55,7 @@ class PlanGoldenSpec extends SparkSpec {
     // round 17: pin the two r16 headline plan changes against silent
     // reversion — pagerank's merge-hint SMJ on the cached adj (a flip back
     // to a per-superstep |E| broadcast must show as a diff) and
-    // bootstrap_ci's Spread exchange on the 32× md5 fan-out
+    // bootstrap_ci's spread exchange on the 32× md5 fan-out
     "q_pagerank",
     "q_bootstrap_ci",
     // round 17: the HITS half-step push — the registered query's final
@@ -63,7 +63,15 @@ class PlanGoldenSpec extends SparkSpec {
     // plan every half-step executes: score-frame BroadcastHashJoin with
     // ZERO exchange on the cached edge side (a flip back to the
     // both-sides-reshuffled SMJ must show as a diff)
-    "q_hits"
+    "q_hits",
+    // partitioning around caches and spreads: q_cooccur's self-join over
+    // its window-partitioned cache (the static plan re-exchanges both SMJ
+    // sides, because an AQE-planned cache reports no partitioning before
+    // it materializes; at sf0.01 AQE then broadcasts the small cache), and
+    // q_repetition's round-robin spread, its only exchange before the
+    // final sort — a partitioning change shows up as a diff here
+    "q_cooccur",
+    "q_repetition"
   )
 
   private def goldenFile(name: String) =
@@ -83,7 +91,8 @@ class PlanGoldenSpec extends SparkSpec {
           .replaceAll("@[0-9a-f]+\\b", "@x")             // object identity hashes
           // Catalyst lambda variables are freshly numbered per SESSION, so
           // their names depend on how many lambdas earlier suites analyzed
-          .replaceAll("\\blambda x_\\d+", "lambda x_n")
+          // (every prefix: q_repetition's two-argument lambdas print y_)
+          .replaceAll("\\blambda ([A-Za-z]+)_\\d+", "lambda $1_n")
           .replaceAll("\\[id=#x\\]", "[id=#x]")
           // file-index locations carry absolute paths and path counts
           .replaceAll("InMemoryFileIndex\\([^)]*\\)\\[[^\\]]*\\]", "InMemoryFileIndex [<paths>]")
