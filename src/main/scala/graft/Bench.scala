@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.SparkEnv
+import graft.core.{SparkEnv, Tables}
 
 /** Benchmark harness: times every registered query at SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line for the driver.
@@ -55,14 +55,14 @@ object Bench {
       def present(t: String): Boolean = new java.io.File(s"$sfDir/$t.parquet").exists()
       spark.range(1000000).groupBy((col("id") % 100).as("k")).count()
         .write.format("noop").mode("overwrite").save()
-      for (t <- Sql.tableNames if present(t)) // single source of truth for the fixture set
-        spark.read.parquet(s"$sfDir/$t.parquet").write.format("noop").mode("overwrite").save()
+      for (t <- Tables.names if present(t)) // also each table's first resolution
+        Tables(spark, sfDir).t(t).write.format("noop").mode("overwrite").save()
       if (present("documents"))
-        spark.read.parquet(s"$sfDir/documents.parquet")
+        Tables(spark, sfDir).documents
           .orderBy("doc_id").limit(5)
           .write.format("noop").mode("overwrite").save()
       if (present("embeddings"))
-        spark.read.parquet(s"$sfDir/embeddings.parquet")
+        Tables(spark, sfDir).embeddings
           .select(call_function("graft_dot", col("embedding"), col("embedding")).as("d"))
           .write.format("noop").mode("overwrite").save()
       // Materialize the session-scoped index structures the engine treats
@@ -435,7 +435,7 @@ object Bench {
                 case _ => Seq.empty[String]
               }
           }.flatten
-          val ts = Sql.tableNames.filter(t => paths.exists(_.endsWith(s"/$t.parquet")))
+          val ts = Tables.names.filter(t => paths.exists(_.endsWith(s"/$t.parquet")))
           (planFp(df), ts)
         } catch { case scala.util.control.NonFatal(_) => ("-", Seq.empty[String]) }
       (name, fp, tables)
@@ -468,12 +468,12 @@ object Bench {
     def duBytes(f: java.io.File): Long =
       if (f.isFile) f.length
       else Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).map(duBytes).sum
-    val fixture = Sql.tableNames.flatMap { t =>
+    val fixture = Tables.names.flatMap { t =>
       val f = new java.io.File(s"$sfDir/$t.parquet")
       if (!f.exists()) None
       else {
         val rows =
-          try spark.read.parquet(f.getAbsolutePath).count()
+          try Tables(spark, sfDir).t(t).count()
           catch { case scala.util.control.NonFatal(_) => -1L }
         Some((t, rows, duBytes(f)))
       }
@@ -492,7 +492,7 @@ object Bench {
       else
         try {
           import org.apache.spark.sql.functions.{col, count, lit, max, coalesce}
-          val pairs = spark.read.parquet(s"$sfDir/lineitem.parquet")
+          val pairs = Tables(spark, sfDir).lineitem
             .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
             .distinct()
           val e = pairs.count()

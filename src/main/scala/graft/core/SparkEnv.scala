@@ -1,6 +1,10 @@
 package graft.core
 
+import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** SparkSession factory for the graft engine.
   *
@@ -72,7 +76,7 @@ object SparkEnv {
   * Catalyst pushes filters/column pruning into the parquet reader.
   */
 final class Tables(spark: SparkSession, dir: String) {
-  def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def t(name: String): DataFrame = Tables.read(spark, s"$dir/$name.parquet")
 
   def region: DataFrame     = t("region")
   def nation: DataFrame     = t("nation")
@@ -88,10 +92,48 @@ final class Tables(spark: SparkSession, dir: String) {
   def events: DataFrame = Tables.nanosToTimestamp(t("events"))
   def documents: DataFrame  = t("documents")
   def embeddings: DataFrame = t("embeddings")
+
+  /** Every fixture table under its view name, `events` normalized. */
+  def all: Seq[(String, DataFrame)] =
+    Tables.names.map(n => n -> (if (n == "events") events else t(n)))
 }
 
 object Tables {
   def apply(spark: SparkSession, dir: String): Tables = new Tables(spark, dir)
+
+  /** The fixture tables: the one list the SQL views, the bench warm-up and
+    * its fixture stamp share.
+    */
+  val names: Seq[String] = Seq(
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings"
+  )
+
+  /** The one place a parquet path (fixture, stage output, artifact dir)
+    * becomes a DataFrame. Schema inference (a Spark job over the footers)
+    * runs once per (session, path); the schema is memoized with the path's
+    * length and modification time, and a changed fingerprint re-infers.
+    * Each call is a fresh reader over that schema: no job, the plans of an
+    * inferring read, new expression ids (self-joins resolve) and a fresh
+    * file listing (appended part files show). Memos derived from a table's
+    * data (`Cached.count`, dedup probes, session artifacts) are not
+    * re-checked: a fixture rewritten mid-session needs a new session there.
+    */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val p      = new org.apache.hadoop.fs.Path(path)
+    val st     = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val stamp  = (st.getLen, st.getModificationTime)
+    val memo   = schemas.synchronized(schemas.getOrElseUpdate(spark, TrieMap.empty))
+    val schema = memo.get(path).collect { case (`stamp`, s) => s }.getOrElse {
+      val s = spark.read.parquet(path).schema
+      memo(path) = (stamp, s)
+      s
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private val schemas =
+    mutable.WeakHashMap.empty[SparkSession, TrieMap[String, ((Long, Long), StructType)]]
 
   /** The one `ts` normalization, shared by batch and streaming readers so
     * the two paths can never diverge. The fixture generator has shipped two

@@ -671,7 +671,7 @@ object Dedup {
         out
       }
     )
-    spark.read.parquet(dir)
+    Tables.read(spark, dir)
   }
 
   private val nearDupWavedMemo =
@@ -1193,7 +1193,7 @@ object Dedup {
         out
       }
     )
-    spark.read.parquet(dir).orderBy("d1", "d2")
+    Tables.read(spark, dir).orderBy("d1", "d2")
   }
 
   private val ngramWavedMemo =

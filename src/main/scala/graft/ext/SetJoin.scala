@@ -500,7 +500,7 @@ object SetJoin {
         out
       }
     )
-    spark.read.parquet(dir).orderBy("d1", "d2")
+    Tables.read(spark, dir).orderBy("d1", "d2")
   }
 
   private val wavedMemo =

@@ -563,7 +563,7 @@ object Similarity {
         .write.mode("overwrite").parquet(p)
       p
     }
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   /** Registered query: reads the materialized graph ([[knnGraphFor]] — the

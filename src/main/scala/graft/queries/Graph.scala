@@ -737,15 +737,16 @@ object GraphQueries {
       // into the plan as a literal — where the previous
       // crossJoin(broadcast(agg)) shape re-planned an aggregate + a
       // broadcast exchange + a BNLJ per half-step (measured r16: 8 extra
-      // AQE stage pairs, ~100-150 ms each, on identical values). Same
-      // 1-row-through-the-driver footprint as the broadcast at any scale.
-      def tot(raw: org.apache.spark.sql.DataFrame): Long =
-        raw.agg(sum("raw").as("tot")).first().getLong(0)
+      // AQE stage pairs, ~100-150 ms each, on identical values). An empty
+      // edge set sums to NULL: read as 0, there is nothing to normalize.
+      def norm(raw: org.apache.spark.sql.DataFrame, key: String): org.apache.spark.sql.DataFrame = {
+        val tot = raw.agg(coalesce(sum("raw"), lit(0L))).first().getLong(0)
+        if (tot == 0L) raw.select(col(key), col("raw").as("v"))
+        else raw.select(col(key), expr(s"raw * ${HitsScale}L div ${tot}L").as("v"))
+      }
       for (_ <- 1 to HitsIters) {
-        val rawA = push(h, "s", nSup, "p")
-        a = rawA.select(col("p"), expr(s"raw * ${HitsScale}L div ${tot(rawA)}L").as("v"))
-        val rawH = push(a, "p", nPart, "s")
-        h = rawH.select(col("s"), expr(s"raw * ${HitsScale}L div ${tot(rawH)}L").as("v"))
+        a = norm(push(h, "s", nSup, "p"), "p")
+        h = norm(push(a, "p", nPart, "s"), "s")
       }
       val hubs = h
         .select(lit("hub").as("side"), col("s").as("node"), col("v").as("score"))
@@ -905,8 +906,7 @@ object GraphQueries {
     "q_conductance",
     (s, dir) => {
       val asg = graft.core.Cached.frame(
-        s.read
-          .parquet(graft.ext.Ivf.indexFor(s, dir).path)
+        Tables.read(s, graft.ext.Ivf.indexFor(s, dir).path)
           .select(col("vec_id"), col("cid").cast("int").as("cid"))
       )
       val sym = lpSymEdges(s, dir)

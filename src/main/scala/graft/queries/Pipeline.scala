@@ -589,7 +589,7 @@ object Pipeline {
           out
         }
       )
-      docs.sparkSession.read.parquet(dir).orderBy("test_id", "leak_id")
+      Tables.read(docs.sparkSession, dir).orderBy("test_id", "leak_id")
     }
   }
 
@@ -1396,7 +1396,7 @@ object Pipeline {
         Seq(a1)
       }
       jobs += eng.submitStage { sp =>
-        val cleaned = sp.read.parquet(a1)
+        val cleaned = Tables.read(sp, a1)
         val segs = graft.core.Cached.frame(
           cleaned
             .select(col("doc_id"), split(col("text"), " ").as("words"))
@@ -1439,7 +1439,7 @@ object Pipeline {
         Seq(a2)
       }
       jobs += eng.submitStage { sp =>
-        val s2docs = sp.read.parquet(a2)
+        val s2docs = Tables.read(sp, a2)
         val drops = Dedup
           .nearDuplicatesUncollapsed(s2docs.select("doc_id", "text"), 0.2)
           .select(col("d2").as("doc_id"))
@@ -1452,7 +1452,7 @@ object Pipeline {
       jobs += eng.submitStage { sp =>
         val h = md5(col("doc_id").cast("string").cast("binary"))
         val w = Window.partitionBy("source").orderBy(h, col("doc_id"))
-        sp.read.parquet(a3)
+        Tables.read(sp, a3)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= PipeMixCap)
           .select(
@@ -1470,7 +1470,7 @@ object Pipeline {
           .partitionBy("source")
           .orderBy("doc_id")
           .rowsBetween(Window.unboundedPreceding, -1)
-        sp.read.parquet(a4)
+        Tables.read(sp, a4)
           .withColumn("before", coalesce(sum("n_tok").over(w), lit(0L)))
           .select(
             col("source"),
@@ -1483,10 +1483,10 @@ object Pipeline {
       }
       jobs += eng.submitStage { sp =>
         val nInput    = Tables(sp, dir).documents.count()
-        val nClean    = sp.read.parquet(a1).count()
-        val nSegdedup = sp.read.parquet(a2).count()
-        val nNeardup  = sp.read.parquet(a3).count()
-        sp.read.parquet(a5)
+        val nClean    = Tables.read(sp, a1).count()
+        val nSegdedup = Tables.read(sp, a2).count()
+        val nNeardup  = Tables.read(sp, a3).count()
+        Tables.read(sp, a5)
           .agg(
             count(lit(1)).as("n_mix"),
             countDistinct(col("source"), col("pack_id")).as("n_packs"),
@@ -1539,7 +1539,7 @@ object Pipeline {
     */
   val pipelineE2E: Q = Q(
     "q_pipeline_e2e",
-    (s, dir) => s.read.parquet(s"${stagedWorkFor(s, dir)}/s6_card"),
+    (s, dir) => Tables.read(s, s"${stagedWorkFor(s, dir)}/s6_card"),
     Some(
       s"""WITH lng AS (
          |  SELECT doc_id,

@@ -1730,21 +1730,13 @@ object Relational {
   /** Explicit GROUPING SETS (SQL-only surface in Spark → via the Sql entry
     * point): per-flag and per-status subtotals, no cross combination.
     */
-  val qGroupingSets: Q = q(
-    "q_grouping_sets",
+  private val GroupingSetsSql =
     """SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt
       |FROM lineitem
       |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
       |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin
-  ) { (s, dir) =>
-    graft.Sql.query(
-      s,
-      dir,
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin
-    )
+  val qGroupingSets: Q = q("q_grouping_sets", GroupingSetsSql) { (s, dir) =>
+    graft.Sql.query(s, dir, GroupingSetsSql)
   }
 
   /** Pivot: documents per (lang, source) as a wide table — DataFrame
@@ -2087,8 +2079,7 @@ object Relational {
       |FROM lineitem
       |WHERE l_partkey BETWEEN 64 AND 255 AND l_suppkey BETWEEN 16 AND 47""".stripMargin
   ) { (s, dir) =>
-    s.read
-      .parquet(graft.ops.ZOrder.layoutFor(s, dir))
+    Tables.read(s, graft.ops.ZOrder.layoutFor(s, dir))
       .filter(col("l_partkey").between(64, 255) && col("l_suppkey").between(16, 47))
       .agg(
         count(lit(1)).as("n"),

@@ -37,7 +37,7 @@ object Sources {
   }
 
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.core.Tables.read(spark, path)
 
   def writeText(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).text(path)

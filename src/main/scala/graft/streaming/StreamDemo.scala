@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.core.SparkEnv
+import graft.core.{SparkEnv, Tables}
 
 /** Streaming entry point: consume the `events` table as a file-source
   * stream (the batch parquet dir doubles as a source; AvailableNow processes
@@ -16,8 +16,8 @@ object StreamDemo {
     require(args.length == 2, "usage: StreamDemo <sfDir> <outDir>")
     val (sfDir, outDir) = (args(0), args(1))
     val spark = SparkEnv.session("graft-stream-demo")
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val events = graft.core.Tables.nanosToTimestamp(
+    val schema = Tables.read(spark, s"$sfDir/events.parquet").schema
+    val events = Tables.nanosToTimestamp(
       spark.readStream
         .schema(schema)
         // the fixture is a single file, not a dir: stream the dir, filter to it
@@ -34,7 +34,7 @@ object StreamDemo {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val n = spark.read.parquet(s"$outDir/data").count()
+    val n = Tables.read(spark, s"$outDir/data").count()
     // Append mode emits a window only once the watermark passes its end, and
     // a finite AvailableNow run's final watermark stops 10 min behind the
     // last event — so the trailing hour window(s) intentionally remain in

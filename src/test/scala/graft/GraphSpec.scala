@@ -305,6 +305,14 @@ class GraphSpec extends SparkSpec {
     assert(GraphQueries.hitsSeed(e, nSup).count() == 0L)
   }
 
+  test("q_hits builds on an empty lineitem and returns no rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-hits-empty").toFile
+    dir.deleteOnExit()
+    graft.core.Tables(spark, sf).lineitem.limit(0)
+      .write.parquet(s"${dir.getAbsolutePath}/lineitem.parquet")
+    assert(GraphQueries.hits.fn(spark, dir.getAbsolutePath).count() == 0L)
+  }
+
   test("q_assortativity equals an exact driver-side Newman estimator") {
     val row = graft.queries.Registry.queries("q_assortativity")(spark, sf).collect()(0)
     val edges = graft.ext.Similarity

@@ -68,29 +68,14 @@ class ParallelismSpec extends SparkSpec {
   test("building spread and grain frames runs zero Spark jobs") {
     val scan   = graft.core.Tables(spark, sf).documents.select("doc_id", "text")
     val cached = graft.core.Cached.frame(scan.groupBy("doc_id").count())
-    val jobs   = new java.util.concurrent.atomic.AtomicInteger()
-    val fence  = scala.concurrent.Promise[Unit]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.fence") != null))
-          fence.trySuccess(()): Unit
-        else jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsDuring {
       for (df <- Seq(scan, cached, huge)) {
         Parallelism.spread(df).queryExecution.optimizedPlan
         Parallelism.spread(df, col(df.columns.head)).queryExecution.optimizedPlan
         Parallelism.grain(df).queryExecution.optimizedPlan
       }
-      // listener events arrive asynchronously but in order: once the
-      // fence job's start is seen, every earlier job has been counted
-      spark.sparkContext.setLocalProperty("graft.fence", "1")
-      try spark.sparkContext.parallelize(Seq(1), 1).count(): Unit
-      finally spark.sparkContext.setLocalProperty("graft.fence", null)
-      scala.concurrent.Await.result(fence.future, scala.concurrent.duration.Duration(60, "s"))
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() == 0, s"${jobs.get()} job(s) ran while building the frames")
+    }
+    assert(jobs == 0, s"$jobs job(s) ran while building the frames")
   }
 
   test("audit: only core/Parallelism probes or hand-numbers partition counts") {

@@ -148,7 +148,7 @@ class ScanAuditSpec extends SparkSpec {
 
   test("no registered query plans more table scans or reads more rows than its pins allow") {
     val tableRows: Map[String, Long] =
-      Sql.tableNames.map(t => t -> spark.read.parquet(s"$sf/$t.parquet").count()).toMap
+      graft.core.Tables.names.map(t => t -> spark.read.parquet(s"$sf/$t.parquet").count()).toMap
     val violations = scala.collection.mutable.ArrayBuffer.empty[String]
     for (q <- graft.queries.Registry.all) {
       val df = q.fn(spark, sf)

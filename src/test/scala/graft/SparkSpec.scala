@@ -32,6 +32,30 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     p +: kids.flatMap(adaptiveNodes)
   }
 
+  /** Spark jobs started while `f` runs. Listener events arrive
+    * asynchronously but in order: once the fence job's start is seen,
+    * every earlier job has been counted.
+    */
+  def jobsDuring(f: => Unit): Int = {
+    val jobs  = new java.util.concurrent.atomic.AtomicInteger()
+    val fence = scala.concurrent.Promise[Unit]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.fence") != null))
+          fence.trySuccess(()): Unit
+        else jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      spark.sparkContext.setLocalProperty("graft.fence", "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count(): Unit
+      finally spark.sparkContext.setLocalProperty("graft.fence", null)
+      scala.concurrent.Await.result(fence.future, scala.concurrent.duration.Duration(60, "s"))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
   def resource(path: String): String = {
     val url = getClass.getClassLoader.getResource(path)
     require(url != null, s"missing test resource $path")
